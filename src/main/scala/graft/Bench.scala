@@ -8,11 +8,13 @@ import java.nio.file.{Files, Paths}
   * the line ~4 KB, so the tail cut off the line's start (BENCH_r02.json
   * `tail` begins mid-JSON), and sbt's LoggedOutput added an `[info] `
   * prefix (fixed via run/outputStrategy). Defense in depth now:
-  *   - full JSON (all per-query times) → `bench.json` (cwd) and
-  *     `/root/repo/BENCH_local.json`
+  *   - full JSON (all per-query times) → `bench.json` and
+  *     `BENCH_local.json` (cwd)
   *   - stdout: the full line first (for whole-stdout greps), then a
   *     SHORT (<1 KB) final line with the headline queries only, so any
   *     tail window still contains one complete parseable JSON line.
+  * An entry that throws records -1 instead of a time and is left out
+  * of `total`.
   */
 object Bench {
   /** Headline subset for the short stdout line (index build, the BM25
@@ -59,21 +61,20 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir).count(); name -> (System.nanoTime() - t0) / 1e9 }
+      catch { case _: Throwable => name -> -1.0 }
     }.toMap
     def qmap(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val total = results.values.filter(_ >= 0).sum
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(results)},"index_warm_sec":$warmSec,"sf":"$sfDir"}"""
     val shortLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${qmap(headline.flatMap(h => results.get(h).map(h -> _)))},"index_warm_sec":$warmSec,"sf":"$sfDir","n_queries":${results.size},"full":"bench.json"}"""
-    Seq(Paths.get("bench.json"), Paths.get("/root/repo/BENCH_local.json"))
-      .foreach { p =>
-        try Files.writeString(p, fullLine)
-        catch { case _: Throwable => () }
-      }
+    Seq("bench.json", "BENCH_local.json").foreach { n =>
+      try Files.writeString(Paths.get(n), fullLine)
+      catch { case _: Throwable => () }
+    }
     spark.stop()
     println(fullLine)
     println(shortLine)

@@ -352,8 +352,8 @@ object ExplainDump {
       "pushed term filter on the posting blocks, broadcast per-term df " +
       "frame, one partial+final per-doc aggregate, TakeOrderedAndProject " +
       "— scoring model changes, dataflow does not.",
-      graft.search.Similarities.classicTfidfTopK(spark, view,
-        Seq("spark", "join"), 10))
+      graft.search.Similarities.topK(spark, view,
+        Seq("spark", "join"), 10, graft.search.Similarities.classicTfidf))
 
     section("semdedup (within-cluster near-identical pairs)",
       "Cluster assignment is a narrow broadcast-centroid map; the " +

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.search.{BmwSearch, DoubleOracle, ExactSearch, MoreQueries, QueryScorers}
+import graft.search.{BmwSearch, DoubleOracle, ExactSearch, MoreQueries, QueryScorers,
+  Similarities}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -108,13 +109,13 @@ object SparkEntry {
     "classic_tfidf_topk" -> ((s, dir) =>
       // per-field similarity swap: the SAME index scored by the 8.x
       // ClassicSimilarity (TF-IDF) instead of BM25
-      quantize(graft.search.Similarities.classicTfidfTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("spark", "join"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("spark", "join"), 10, Similarities.classicTfidf))),
     "bm25_omit_norms" -> ((s, dir) =>
       // omitNorms=true scoring: norm value 1 for every doc, length
       // normalization collapses to a constant — norms never read
-      quantize(graft.search.Similarities.bm25OmitNormsTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("spark", "join"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("spark", "join"), 10, Similarities.bm25OmitNorms))),
     "cluster_keep_best" -> ((s, dir) =>
       // curation keeper selection: each near-dup cluster keeps its
       // LONGEST member (tie min doc_id) — argmax as one hash aggregate
@@ -126,23 +127,23 @@ object SparkEntry {
     "dfr_topk" -> ((s, dir) =>
       // sixth pluggable similarity: DFR I(n)·L·H2 (divergence from
       // randomness) over the same postings + dictionary df
-      quantize(graft.search.Similarities.dfrTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("spark", "join"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("spark", "join"), 10, Similarities.dfr()))),
     "ib_ll_topk" -> ((s, dir) =>
       // seventh pluggable similarity: information-based LL·DF·H2
       // (Clinchant & Gaussier 2010) over the same postings + df
-      quantize(graft.search.Similarities.ibLlTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("spark", "join"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("spark", "join"), 10, Similarities.ibLl()))),
     "axiomatic_f2exp_topk" -> ((s, dir) =>
       // eighth pluggable similarity: Axiomatic F2EXP (Fang & Zhai 2005,
       // s=0.5 k=0.35 reference defaults) — the log-free rational form
-      quantize(graft.search.Similarities.axiomaticF2ExpTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("merge", "scan"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("merge", "scan"), 10, Similarities.axiomaticF2Exp()))),
     "lm_jelinek_mercer_topk" -> ((s, dir) =>
       // fourth pluggable similarity: Jelinek-Mercer smoothing (λ=0.7,
       // the Solr factory default) over the same postings + ctf
-      quantize(graft.search.Similarities.lmJelinekMercerTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("spark", "join"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("spark", "join"), 10, Similarities.lmJelinekMercer()))),
     "mixed_sim_dismax" -> ((s, dir) =>
       // per-FIELD similarity mixing (PerFieldSimilarityWrapper / schema
       // <similarity> per fieldType): title by BM25, body by LMDirichlet,
@@ -176,9 +177,8 @@ object SparkEntry {
     "bm25_params_topk" -> ((s, dir) =>
       // tenth pluggable similarity: BM25 with the schema-tuned
       // short-field preset k1=0.9 b=0.4 (BM25SimilarityFactory params)
-      quantize(graft.search.Similarities.bm25ParamsTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("spark", "join"), 10,
-        0.9, 0.4))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("spark", "join"), 10, Similarities.bm25Params(0.9, 0.4)))),
     "domain_blocklist" -> ((s, dir) =>
       // UT1-style domain blocklist gate: broadcast host list,
       // narrow probe on the canonical host
@@ -191,8 +191,8 @@ object SparkEntry {
     "sweetspot_topk" -> ((s, dir) =>
       // ninth pluggable similarity: SweetSpotSimilarity — classic
       // TF-IDF with a [30,60] plateau length normalization
-      quantize(graft.search.Similarities.sweetSpotTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("spark", "join"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("spark", "join"), 10, Similarities.sweetSpot()))),
     "combined_field_topk" -> ((s, dir) =>
       // CombinedFieldQuery (simple BM25F, LUCENE-8216): one BM25
       // saturation curve over the weighted cross-field blended tf/len
@@ -301,8 +301,8 @@ object SparkEntry {
     "lm_dirichlet_topk" -> ((s, dir) =>
       // language-model similarity (Dirichlet smoothing, μ=2000) over the
       // same postings + ctf from the term dictionary
-      quantize(graft.search.Similarities.lmDirichletTopK(
-        s, IndexCache.documentsIndex(s, dir), Seq("merge", "scan"), 10))),
+      quantize(Similarities.topK(s, IndexCache.documentsIndex(s, dir),
+        Seq("merge", "scan"), 10, Similarities.lmDirichlet()))),
     "frange_filter" -> ((s, dir) => {
       // Solr {!frange l=.. u=..} over query(...): docs whose function
       // value (here the BM25 score, quantized) lies in a band — a
@@ -1392,7 +1392,7 @@ object SparkEntry {
     "boolean_sim_topk" -> ((s, dir) =>
       // BooleanSimilarity: score = Σ query-term boost, nothing else —
       // the third pluggable similarity over the same index
-      quantize(graft.search.Similarities.booleanSimTopK(s,
+      quantize(Similarities.booleanSimTopK(s,
         IndexCache.documentsIndex(s, dir),
         Seq("spark" -> 2.0, "join" -> 1.0, "scan" -> 1.5), 10))),
     "geo_polygon" -> ((s, dir) =>

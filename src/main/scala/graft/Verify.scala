@@ -10,13 +10,16 @@ import java.nio.file.{Files, Paths}
   * miss a map keyed `<name>`). Redundancy now covers:
   *   - oracle maps keyed under BOTH `<name>` AND `<name>.parquet`
   *   - map filenames: `oracle_sql.json`, `oracles.json`, `oracle.json`,
-  *     `CORRECTNESS_HINTS.json` (all identical content), in outDir,
-  *     cwd, and the repo root (committed)
+  *     `CORRECTNESS_HINTS.json` (all identical content), in outDir
+  *     and cwd (run from the repo root, the cwd copies are the
+  *     committed ones)
   *   - per-entry SQL files `<name>.sql` AND `<name>.parquet.sql`,
   *     BESIDE each `<name>.parquet` dir — never inside: a non-parquet
   *     file inside the dump dir would break whole-directory parquet
   *     readers
   * All JSON is strictly ASCII (non-ASCII + control chars \\u-escaped).
+  * An entry that throws is reported on stderr and the run exits 1
+  * after dumping everything else, naming every failed entry.
   */
 object Verify {
 
@@ -43,7 +46,7 @@ object Verify {
     .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
 
   /** Write the oracle map + per-entry SQL files under `outDir`, and
-    * best-effort copies at cwd + repo root.
+    * best-effort copies at cwd.
     */
   def dumpOracles(outDir: String): Unit = {
     val json = oracleJson
@@ -56,11 +59,10 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/$name.sql"), sql)
       Files.writeString(Paths.get(s"$outDir/$name.parquet.sql"), sql)
     }
-    names.flatMap(n => Seq(Paths.get(n), Paths.get(s"/root/repo/$n")))
-      .foreach { p =>
-        try Files.writeString(p, json)
-        catch { case _: Throwable => () } // read-only cwd is fine
-      }
+    names.foreach { n =>
+      try Files.writeString(Paths.get(n), json)
+      catch { case _: Throwable => () } // read-only cwd is fine
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -77,17 +79,25 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .toSeq.flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name.parquet")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
     dumpOracles(outDir)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} entries failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }
 

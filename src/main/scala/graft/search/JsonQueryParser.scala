@@ -260,9 +260,10 @@ object JsonQueryParser {
             case 'u' =>
               if (i + 4 >= s.length) fail("bad \\u escape")
               val hex = s.substring(i + 1, i + 5)
-              // exactly four hex DIGITS — parseInt alone would accept
-              // a sign and throw a foreign exception type on junk
-              if (!hex.forall(c => Character.digit(c, 16) >= 0))
+              // exactly four ASCII hex DIGITS — parseInt alone would
+              // accept a sign, non-ASCII digits such as U+0660, and
+              // throw a foreign exception type on junk
+              if (!hex.forall(c => "0123456789abcdefABCDEF".indexOf(c) >= 0))
                 fail(s"bad \\u escape '$hex'")
               b += Integer.parseInt(hex, 16).toChar
               i += 4

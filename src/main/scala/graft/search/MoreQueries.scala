@@ -382,10 +382,8 @@ object MoreQueries {
       case DoubleOracle =>
         val w = scorers.phraseWeightD(slotTerms)
         joined.select(col("doc_id"),
-          (lit(w) * col(freqCol) / (col(freqCol) +
-            lit(scorers.k1d) * (lit(1.0) - lit(scorers.bd) +
-              lit(scorers.bd) * col("lossy_dl") / lit(scorers.avgdlD))))
-            .as("score"))
+          Similarities.bm25(lit(w), col(freqCol), col("lossy_dl"),
+            lit(scorers.avgdlD), scorers.k1d, scorers.bd).as("score"))
       case Float32Lucene =>
         val bc = spark.sparkContext.broadcast(scorers)
         val ts = slotTerms
@@ -856,10 +854,8 @@ object MoreQueries {
       .groupBy("doc_id")
       // lossy_dl is a per-DOC property (same on every term row)
       .agg(sum("tf").as("tf"), max("lossy_dl").as("lossy_dl"))
-    val score = lit(idfD) * col("tf") /
-      (col("tf") + lit(graft.spec.LuceneSpec.K1d) *
-        (lit(1d) - lit(graft.spec.LuceneSpec.Bd) +
-          lit(graft.spec.LuceneSpec.Bd) * col("lossy_dl") / lit(avgdlD)))
+    val score = Similarities.bm25(lit(idfD), col("tf"), col("lossy_dl"),
+      lit(avgdlD), graft.spec.LuceneSpec.K1d, graft.spec.LuceneSpec.Bd)
     agg.select(col("doc_id"), score.as("score"))
       .orderBy(col("score").desc, col("doc_id").asc).limit(k)
   }
@@ -1027,11 +1023,9 @@ object MoreQueries {
     val persc = hits.join(broadcast(dfs), Seq("shard", "term"))
       .join(broadcast(stats), Seq("shard"))
       .withColumn("s",
-        log(lit(1d) + (col("n") - col("df") + lit(0.5)) /
-            (col("df") + lit(0.5))) *
-          col("tf") / (col("tf") + lit(1.2) * (lit(1d) - lit(0.75) +
-            lit(0.75) * col("lossy_dl") /
-              (col("sttf") / col("n").cast("double")))))
+        Similarities.bm25(Similarities.bm25Idf(col("n")), col("tf"),
+          col("lossy_dl"), col("sttf") / col("n").cast("double"),
+          graft.spec.LuceneSpec.K1d, graft.spec.LuceneSpec.Bd))
     val agg = persc.groupBy("shard", "doc_id").agg(sum("s").as("score"))
     val w = Window.partitionBy("shard")
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -1520,15 +1514,6 @@ object MoreQueries {
         col("s2").cast("long").as("p2_score"))
   }
 
-  /** Lucene `explain()` / Solr debugQuery [8x search/Weight.java#explain,
-    * BM25Similarity.java#explain, test-framework CheckHits.java]: the
-    * per-term decomposition of every top-k doc's BM25 score — (tf, df,
-    * lossy dl, idf, term contribution) rows whose contributions sum to
-    * the doc's returned score, which CheckHits asserts on every test
-    * query. Candidate-bounded: components are computed from the same
-    * decoded posting rows the scoring pass reads, joined to the
-    * broadcast top-k — never a second corpus pass.
-    */
   /** Per-(doc, term) BM25 frame: decoded postings joined to the
     * broadcast per-term stats with the score expression applied —
     * shared by [[explainTopK]] and [[coveringQuery]] so the expression
@@ -1543,31 +1528,24 @@ object MoreQueries {
       .map(t => (t.term, t.df, t.idfD)).toDF("term", "df", "idf")
     ExactSearch.decodedPostings(spark, view, terms)
       .join(broadcast(infoDf), Seq("term"))
-      .withColumn("s", col("idf") * col("tf") / (col("tf") +
-        lit(scorers.k1d) * (lit(1.0) - lit(scorers.bd) +
-          lit(scorers.bd) * col("lossy_dl") / lit(scorers.avgdlD))))
+      .withColumn("s", Similarities.bm25(col("idf"), col("tf"),
+        col("lossy_dl"), lit(scorers.avgdlD), scorers.k1d, scorers.bd))
   }
 
-  /** Per-doc sum of the per-term scores in ASCENDING TERM ORDER — the
-    * same deterministic-summation rule as ExactSearch.scoredWith (rows
-    * sorted before adding), so the float result is a pure function of
-    * the data, never of partial-aggregate merge order. Emits
-    * (doc_id, score, n_matched).
+  /** Lucene `explain()` / Solr debugQuery [8x search/Weight.java#explain,
+    * BM25Similarity.java#explain, test-framework CheckHits.java]: the
+    * per-term decomposition of every top-k doc's BM25 score — (tf, df,
+    * lossy dl, idf, term contribution) rows whose contributions sum to
+    * the doc's returned score, which CheckHits asserts on every test
+    * query. Candidate-bounded: components are computed from the same
+    * decoded posting rows the scoring pass reads, joined to the
+    * broadcast top-k — never a second corpus pass.
     */
-  private[search] def sumScoresDeterministic(per: DataFrame): DataFrame =
-    per.groupBy("doc_id")
-      .agg(aggregate(
-          transform(array_sort(collect_list(struct(col("term"), col("s")))),
-            x => x.getField("s")),
-          lit(0.0), (a, x) => a + x).as("score"),
-        count(lit(1)).as("n_matched"))
-
   def explainTopK(spark: SparkSession, view: IndexView,
                   terms: Seq[String], k: Int): DataFrame = {
     val scorers = QueryScorers(view, terms, DoubleOracle)
     val per = perTermScored(spark, view, terms, scorers)
-    val top = sumScoresDeterministic(per).select("doc_id", "score")
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    val top = Similarities.sumTopK(per, k)
     per.join(broadcast(top), Seq("doc_id"))
       .select(col("doc_id"), col("term"), col("tf").cast("long").as("tf"),
         col("df"), col("lossy_dl").cast("long").as("dl"),
@@ -1780,7 +1758,8 @@ object MoreQueries {
   def coveringQuery(spark: SparkSession, view: IndexView,
                     terms: Seq[String], k: Int): DataFrame = {
     val scorers = QueryScorers(view, terms, DoubleOracle)
-    sumScoresDeterministic(perTermScored(spark, view, terms, scorers))
+    Similarities.sumScoresDeterministic(
+        perTermScored(spark, view, terms, scorers))
       .where(col("n_matched") >= lit(1L) + pmod(col("doc_id"), lit(3L)))
       .select(col("doc_id"), col("n_matched"),
         round(col("score") * 10000).cast("long").as("score_q"))
@@ -1867,13 +1846,10 @@ object MoreQueries {
     val per = ExactSearch.decodedPostings(spark, view, exp.map(_._1).toSeq)
       .join(broadcast(info), Seq("term"))
       .select(col("doc_id"), col("term"),
-        (col("boost") * lit(idfB) * col("tf") / (col("tf") +
-          lit(graft.spec.LuceneSpec.K1d) *
-            (lit(1.0) - lit(graft.spec.LuceneSpec.Bd) +
-              lit(graft.spec.LuceneSpec.Bd) * col("lossy_dl")
-                / lit(avgdlD)))).as("s"))
-    sumScoresDeterministic(per).select("doc_id", "score")
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+        Similarities.bm25(col("boost") * lit(idfB), col("tf"), col("lossy_dl"),
+          lit(avgdlD), graft.spec.LuceneSpec.K1d, graft.spec.LuceneSpec.Bd)
+          .as("s"))
+    Similarities.sumTopK(per, k)
   }
 
   /** SpanOrQuery inside SpanNearQuery [8x lucene/core

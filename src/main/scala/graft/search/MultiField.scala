@@ -187,9 +187,7 @@ object MultiField {
     })
     val per = tfc.select(col("doc_id"), col("term"),
       scoreU(col("term"), col("tfc"), col("cl")).as("s"))
-    MoreQueries.sumScoresDeterministic(per).select("doc_id", "score")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+    Similarities.sumTopK(per, k)
   }
 
   /** Like [[dismaxScored]] but keeps `n_terms` — the count of DISTINCT

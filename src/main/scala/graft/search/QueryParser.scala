@@ -46,7 +46,8 @@ object QueryParser {
   /** Parse a qf spec (`"title^2 body"`) to field→boost. */
   def parseQf(qf: String): Map[String, Double] =
     qf.trim.split("\\s+").filter(_.nonEmpty).map { part =>
-      part.split('^') match {
+      // limit -1 keeps a trailing empty boost: 'title^' is an error
+      part.split("\\^", -1) match {
         case Array(f) if f.nonEmpty => f -> 1.0
         case Array(f, b) if f.nonEmpty =>
           // 'title^x' must raise the parser's own error, not a raw

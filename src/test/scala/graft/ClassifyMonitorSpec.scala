@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzer
 import graft.codec.SmallFloat
-import graft.search.{Classify, Monitor, Similarities}
+import graft.search.{Classify, DoubleOracle, ExactSearch, Monitor, Similarities}
 
 /** Tests for the classification / monitor (percolator) / pluggable
   * similarity modules: crafted corpora where the expected answers are
@@ -225,19 +225,46 @@ class ClassifyMonitorSpec extends AnyFunSuite {
       }.sortBy { case (id, sq) => (-sq, id) }.take(k)
     }
 
+    def expectedBm25(terms: Seq[String], k: Int, k1: Double, b: Double,
+                     omitNorms: Boolean): List[(Long, Long)] = {
+      val dfm = terms.distinct.map(t => t -> toks.count(_._2.contains(t))).toMap
+      val avgdl = sttf.toDouble / n
+      toks.toList.flatMap { case (id, tk) =>
+        val dl = if (omitNorms) 1.0 else SmallFloat.lossyLength(tk.length).toDouble
+        val present = terms.distinct.filter(t => tk.contains(t) && dfm(t) > 0)
+        if (present.isEmpty) None
+        else {
+          val s = present.map { t =>
+            val tf = tk.count(_ == t).toDouble
+            val idf = math.log(1.0 + (n - dfm(t) + 0.5) / (dfm(t) + 0.5))
+            idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
+          }.sum
+          Some(id -> math.round(s * 10000))
+        }
+      }.sortBy { case (id, sq) => (-sq, id) }.take(k)
+    }
+
     for (terms <- Seq(Seq("apple"), Seq("zebra", "lion"), Seq("hash", "table"))) {
-      assert(q(Similarities.classicTfidfTopK(spark, view, terms, 5))
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.classicTfidf))
         == expectedClassic(terms, 5), s"classic $terms")
-      assert(q(Similarities.lmDirichletTopK(spark, view, terms, 5))
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.lmDirichlet()))
         == expectedLm(terms, 5, 2000.0), s"lm $terms")
-      assert(q(Similarities.lmJelinekMercerTopK(spark, view, terms, 5))
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.lmJelinekMercer()))
         == expectedJm(terms, 5, 0.7), s"jm $terms")
-      assert(q(Similarities.dfrTopK(spark, view, terms, 5))
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.dfr()))
         == expectedDfr(terms, 5, 1.0), s"dfr $terms")
-      assert(q(Similarities.ibLlTopK(spark, view, terms, 5))
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.ibLl()))
         == expectedIb(terms, 5, 1.0), s"ib $terms")
-      assert(q(Similarities.axiomaticF2ExpTopK(spark, view, terms, 5))
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.axiomaticF2Exp()))
         == expectedAx(terms, 5, 0.5, 0.35), s"ax $terms")
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.bm25Params(0.9, 0.4)))
+        == expectedBm25(terms, 5, 0.9, 0.4, omitNorms = false), s"bm25 params $terms")
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.bm25OmitNorms))
+        == expectedBm25(terms, 5, 1.2, 0.75, omitNorms = true), s"bm25 omitNorms $terms")
+      // BM25 at the default (k1, b) through the similarity dataflow is the
+      // exact path's double-precision ranking
+      assert(q(Similarities.topK(spark, view, terms, 5, Similarities.bm25Params(1.2, 0.75)))
+        == q(ExactSearch.topK(spark, view, terms, 5, DoubleOracle)), s"bm25 exact $terms")
     }
   }
 }

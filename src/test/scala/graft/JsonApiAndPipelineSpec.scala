@@ -89,6 +89,10 @@ class JsonApiAndPipelineSpec extends AnyFunSuite {
     intercept[JsonQueryParser.JsonParseException] {
       JsonQueryParser.parse("\"\\uZZZZ\"")
     }
+    // non-ASCII digits (U+0660..U+0669) are not hex digits
+    intercept[JsonQueryParser.JsonParseException] {
+      JsonQueryParser.parse("\"\\u" + "\u0660\u0660\u0666\u0661" + "\"")
+    }
   }
 
   test("json strictness: df honored, qparser bodies reject junk keys") {

@@ -96,6 +96,8 @@ class QueryParserSpec extends AnyFunSuite {
   test("qf spec parsing") {
     assert(QueryParser.parseQf("title^2 body") ==
       Map("title" -> 2.0, "body" -> 1.0))
+    // an empty boost is malformed, not boost 1.0
+    intercept[QueryParser.ParseException](QueryParser.parseQf("title^ body"))
   }
 
   test("parse errors") {

@@ -25,7 +25,7 @@ object IndexCache {
   val TestSegmentSize = 1024L
 
   /** Bump when the segment-table format changes. */
-  val FormatVersion = "v1"
+  val FormatVersion = "v2"
 
   def documentsIndex(spark: SparkSession, sfDir: String): IndexView =
     // SessionCache evicts and reloads if the cached view's session has

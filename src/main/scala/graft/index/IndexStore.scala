@@ -2,7 +2,8 @@ package graft.index
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,6 +18,7 @@ final case class BatchManifest(
     lastDocIdExclusive: Long,
     segmentIds: Seq[Int],
     docs: Long,            // metrics
+    sumTotalTermFreq: Long, // Σ dl over the batch's docmeta (BM25 avgdl)
     postingRows: Long,     // block rows
     postings: Long,        // posting entries (Σ doc_count)
     bytes: Long,           // postings bytes on disk
@@ -42,7 +44,10 @@ final case class Snapshot(version: Int, segSize: Long, batches: Seq[Int])
  * skipping batches whose manifest exists (see [[IndexWriter.build]]).
  */
 object IndexStore {
+  // a missing field is an error, not a silent 0: a manifest written
+  // before `sumTotalTermFreq` existed would otherwise read as avgdl = 0
   private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
 
   def manifestPath(dir: String, batch: Int): Path =
     Paths.get(dir, "manifests", f"manifest-$batch%05d.json")
@@ -63,8 +68,13 @@ object IndexStore {
 
   def readManifest(dir: String, batch: Int): Option[BatchManifest] = {
     val p = manifestPath(dir, batch)
-    if (Files.exists(p)) Some(mapper.readValue(Files.readAllBytes(p), classOf[BatchManifest]))
-    else None
+    if (!Files.exists(p)) None
+    else try Some(mapper.readValue(Files.readAllBytes(p), classOf[BatchManifest]))
+    catch {
+      case e: JsonProcessingException => throw new IllegalStateException(
+        s"manifest of batch $batch in $dir is unreadable (${e.getOriginalMessage}); " +
+          "an index written by an older format must be rebuilt", e)
+    }
   }
 
   /** Single-writer publish (bulk build owns the dir; see
@@ -167,12 +177,12 @@ object IndexWriter {
     postings.write.mode("overwrite").parquet(s"$bd/postings")
     import spark.implicits._
     val written = spark.read.parquet(s"$bd/postings").as[PostingBlockRow]
-    // doc count observed DURING the docmeta decode — no separate count
-    // action (driver-side fixed costs are the Amdahl term of the
-    // two-cluster-size ratio at small batch sizes)
+    // doc count and Σ dl observed DURING the docmeta decode — no
+    // separate action (driver-side fixed costs are the Amdahl term of
+    // the two-cluster-size ratio at small batch sizes)
     val obs = new org.apache.spark.sql.Observation()
     Indexer.metaRowsFromBlocks(spark, written).toDF()
-      .observe(obs, count(lit(1)).as("n"))
+      .observe(obs, count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sttf"))
       .write.mode("overwrite").parquet(s"$bd/docmeta")
     val nDocs = obs.get("n").asInstanceOf[Long]
     // terms from one scan of the written postings (consistency by
@@ -187,7 +197,8 @@ object IndexWriter {
     IndexStore.writeManifest(dir, BatchManifest(
       batch = b, firstDocId = lo, lastDocIdExclusive = hi,
       segmentIds = (Indexer.segmentOf(lo, segSize) to Indexer.segmentOf(math.max(lo, hi - 1), segSize)).toList,
-      docs = nDocs, postingRows = tstats.getLong(2), postings = tstats.getLong(1),
+      docs = nDocs, sumTotalTermFreq = obs.get("sttf").asInstanceOf[Long],
+      postingRows = tstats.getLong(2), postings = tstats.getLong(1),
       bytes = dirBytes(new java.io.File(s"$bd/postings")), terms = tstats.getLong(0),
       committedAtEpochMs = System.currentTimeMillis()))
   }
@@ -257,6 +268,12 @@ object IndexReader {
       .as[PostingBlockRow]
     val terms    = spark.read.parquet(dirs.map(_ + "/terms"): _*)
     val docmeta  = spark.read.parquet(dirs.map(_ + "/docmeta"): _*).as[DocMetaRow]
-    IndexView(postings, terms, docmeta)
+    // collection stats from the commit: Σ over the snapshot's manifests,
+    // read on the driver (the reference's SegmentInfos, not a scan)
+    val manifests = snap.batches.map(b => IndexStore.readManifest(dir, b)
+      .getOrElse(throw new IllegalStateException(
+        s"snapshot v${snap.version} in $dir lists batch $b, which has no manifest")))
+    IndexView(postings, terms, docmeta, Some(graft.stats.CollectionStats(
+      manifests.map(_.docs).sum, manifests.map(_.sumTotalTermFreq).sum)))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analysis.{Analyzer, StopHash}
 import graft.codec.{PostingCodec, SmallFloat}
+import graft.stats.{CollectionStats, GlobalStats}
 
 /** Input row of the indexer: dense global doc_id + analyzable text.
   * docIDs must be a pure function of the data (never of partition
@@ -113,13 +114,25 @@ private[index] final class ChunkBuilder {
   }
 }
 
-/** The three segment tables of an index snapshot (SURVEY.md §1.1). */
+/** The three segment tables of an index snapshot (SURVEY.md §1.1), and
+  * the collection statistics its commit recorded: `committedStats` is
+  * set by [[IndexReader]] from the snapshot's manifests and is `None`
+  * for a view with no commit (in-memory builds, merges, tests). They
+  * must describe `docmeta`: a view built from other tables leaves them
+  * out.
+  */
 final case class IndexView(postings: Dataset[PostingBlockRow],
                            terms: DataFrame,
-                           docmeta: Dataset[DocMetaRow]) {
-  def persisted(): IndexView = {
-    IndexView(postings.persist(), terms.persist(), docmeta.persist())
-  }
+                           docmeta: Dataset[DocMetaRow],
+                           committedStats: Option[CollectionStats] = None) {
+  /** docCount and sumTotalTermFreq: the commit's, or one docmeta
+    * aggregate per view instance.
+    */
+  lazy val collectionStats: CollectionStats =
+    committedStats.getOrElse(GlobalStats.docmetaStats(docmeta))
+
+  def persisted(): IndexView =
+    copy(postings.persist(), terms.persist(), docmeta.persist())
 }
 
 /**

@@ -321,20 +321,13 @@ object QueryCompiler {
     * Pure term disjunctions/conjunctions lower to the block-max kernels
     * (see [[kernelChoice]]); everything else takes the exact path.
     */
-  /** Bench-only A/B escape hatch: GRAFT_NO_BMW_ROUTE=1 forces the exact
-    * path so the kernel routing's effect can be measured in isolation
-    * (same spirit as SPARK_GRAFT_BENCH_ONLY; the driver never sets it).
-    */
-  private def routingDisabled: Boolean =
-    sys.env.get("GRAFT_NO_BMW_ROUTE").contains("1")
-
   def topK(spark: SparkSession, view: IndexView, q: Query, k: Int,
            mode: ScoreMode = DoubleOracle): DataFrame = {
     val rw = rewrite(view, q)
     kernelChoice(rw) match {
-      case Some((ts, false)) if !routingDisabled =>
+      case Some((ts, false)) =>
         BmwSearch.topK(spark, view, ts, k, mode)
-      case Some((ts, true)) if !routingDisabled =>
+      case Some((ts, true)) =>
         BmwSearch.topKAnd(spark, view, ts, k, mode)
       case _ =>
         compileRewritten(spark, view, rw, mode)

@@ -1,7 +1,8 @@
 package graft.stats
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import graft.index.IndexView
+import graft.index.{DocMetaRow, IndexView}
 
 /** Collection-level statistics — the analog of the reference's
   * `CollectionStatistics` gathered once at Weight creation
@@ -16,9 +17,15 @@ final case class CollectionStats(docCount: Long, sumTotalTermFreq: Long)
 final case class TermStats(term: String, df: Long, ctf: Long)
 
 /**
- * Global aggregates, computed once per query (or cached per index) and
- * broadcast to scoring — "doc-frequency and collection statistics …
- * computed as global aggregates and broadcast" (BASELINE.json:6).
+ * Global aggregates gathered once per query and handed to scoring —
+ * "doc-frequency and collection statistics … computed as global
+ * aggregates and broadcast" (BASELINE.json:6).
+ *
+ * Collection statistics come off the view: a loaded snapshot sums the
+ * counts its batch manifests recorded at commit (no job, like the
+ * reference reading SegmentInfos); a view with no commit aggregates its
+ * docmeta once ([[docmetaStats]]). Term statistics are one shuffle-free
+ * scan of the query terms' dictionary rows, summed on the driver.
  *
  * Skew note: per-term global df is aggregated from per-(segment, term)
  * rows — already one row per segment per term, so a stopword-grade hot
@@ -28,21 +35,26 @@ final case class TermStats(term: String, df: Long, ctf: Long)
  */
 object GlobalStats {
 
-  def collectionStats(view: IndexView): CollectionStats = {
-    val row = view.docmeta.agg(
+  def collectionStats(view: IndexView): CollectionStats = view.collectionStats
+
+  /** docCount and Σ dl of a docmeta table: one aggregate job. */
+  def docmetaStats(docmeta: Dataset[DocMetaRow]): CollectionStats = {
+    val row = docmeta.agg(
       count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sttf")).head()
     CollectionStats(row.getLong(0), row.getLong(1))
   }
 
-  /** Global stats for a small set of query terms: driver-side map (tiny). */
-  def termStats(view: IndexView, terms: Seq[String]): Map[String, TermStats] = {
+  /** Global stats for a small set of query terms: the ≤ #segments
+    * dictionary rows per term, collected and summed on the driver.
+    */
+  def termStats(view: IndexView, terms: Seq[String]): Map[String, TermStats] =
     view.terms.filter(col("term").isin(terms: _*))
-      .groupBy("term")
-      .agg(sum("df").as("df"), sum("ctf").as("ctf"))
+      .select("term", "df", "ctf")
       .collect()
-      .map(r => r.getString(0) -> TermStats(r.getString(0), r.getLong(1), r.getLong(2)))
-      .toMap
-  }
+      .groupMapReduce(_.getString(0))(r => (r.getLong(1), r.getLong(2))) {
+        case ((df1, ctf1), (df2, ctf2)) => (df1 + df2, ctf1 + ctf2)
+      }
+      .map { case (t, (df, ctf)) => t -> TermStats(t, df, ctf) }
 
   /** Salted two-phase term-frequency aggregation over raw occurrences
     * (term → df, ctf): phase 1 groups by (term, salt) building partial

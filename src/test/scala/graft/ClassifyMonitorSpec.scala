@@ -35,7 +35,7 @@ class ClassifyMonitorSpec extends AnyFunSuite {
       (9L, "sort batch steady", "aa"),      // matches q4 (sort, batch, NOT fast)
       (10L, "sort batch fast", "bb")        // q4 suppressed by MUST_NOT fast
     )
-    val dir = java.nio.file.Files.createTempDirectory("graft-cm").toString
+    val dir = SparkTestBase.tempDir("graft-cm")
     rows.toDF("doc_id", "text", "lang")
       .withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -74,7 +74,7 @@ class ClassifyMonitorSpec extends AnyFunSuite {
 
   test("kNN classifier: two separated embedding clusters vote correctly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-knn").toString
+    val dir = SparkTestBase.tempDir("graft-knn")
     // cluster A around (1, 0, 0), label 7; cluster B around (0, 1, 0), label 9
     val rows = (0 until 4).map(i =>
       (i.toLong, Array(1.0f, 0.01f * i, 0.0f), 7)) ++

@@ -77,13 +77,13 @@ class DeletesSpec extends AnyFunSuite {
 
   test("durable tombstone batches round-trip (write-once, distinct union)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-del").toString
+    val dir = SparkTestBase.tempDir("graft-del")
     Deletes.write(spark, dir, Seq(1L, 2L, 3L).toDF("doc_id"))
     Deletes.write(spark, dir, Seq(3L, 4L).toDF("doc_id"))
     val got = Deletes.load(spark, dir).collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L, 3L, 4L))
     // empty dir → empty frame
-    val none = java.nio.file.Files.createTempDirectory("graft-del2").toString
+    val none = SparkTestBase.tempDir("graft-del2")
     assert(Deletes.load(spark, none).count() == 0)
   }
 

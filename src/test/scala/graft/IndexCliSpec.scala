@@ -28,7 +28,7 @@ class IndexCliSpec extends AnyFunSuite {
   }
 
   test("cli build on the web shape == library build on the same docs") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-clispec").toString
+    val tmp = SparkTestBase.tempDir("graft-clispec")
     val web = CorpusSynth.corpus(spark, 300, seed = 7L)
     web.write.mode("overwrite").parquet(s"$tmp/web.parquet")
 

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import graft.index.{IndexReader, IndexStore, IndexWriter, Indexer, MergePolicy, Merger}
 import graft.search.{BmwSearch, DoubleOracle, ExactSearch, Float32Lucene}
+import graft.stats.GlobalStats
 import graft.synth.CorpusSynth
 
 /** Durable layout: resumable checkpointed build, atomic snapshot publish,
@@ -13,10 +14,16 @@ class IndexStoreSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-index").toString
+    SparkTestBase.tempDir("graft-index")
 
   private def corpus(n: Long) =
     Indexer.asDocInput(spark, CorpusSynth.corpusWithIds(spark, n, seed = 5L))
+
+  /** The commit's collection stats equal the docmeta aggregate. */
+  private def assertCommittedStats(view: graft.index.IndexView): Unit = {
+    assert(view.committedStats.isDefined)
+    assert(GlobalStats.collectionStats(view) == GlobalStats.docmetaStats(view.docmeta))
+  }
 
   private def topDocs(view: graft.index.IndexView, terms: Seq[String]) =
     ExactSearch.topK(spark, view, terms, 10, DoubleOracle)
@@ -51,8 +58,49 @@ class IndexStoreSpec extends AnyFunSuite {
     val m1 = IndexStore.readManifest(dir, 1).get
     assert(m0.firstDocId == 0 && m0.lastDocIdExclusive == m1.firstDocId)
     assert(m0.docs > 0 && m0.postings > 0 && m0.bytes > 0 && m0.terms > 0)
+    assert(m0.sumTotalTermFreq > 0 && m1.sumTotalTermFreq > 0)
     assert(m0.segmentIds.nonEmpty)
     assert(m0.docs + m1.docs == 600)
+    assertCommittedStats(IndexReader.load(spark, dir))
+  }
+
+  test("a manifest without sumTotalTermFreq is refused, naming dir and batch") {
+    val dir = tmpDir()
+    IndexWriter.build(spark, corpus(300), dir, segSize = 128L, nBatches = 1)
+    // the manifest as written before the field existed
+    val legacy = """{"batch":0,"firstDocId":0,"lastDocIdExclusive":300,""" +
+      """"segmentIds":[0,1,2],"docs":300,"postingRows":10,"postings":10,""" +
+      """"bytes":10,"terms":10,"committedAtEpochMs":0}"""
+    Files.write(IndexStore.manifestPath(dir, 0), legacy.getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](IndexReader.load(spark, dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("batch 0"), e.getMessage)
+    assert(e.getMessage.contains("sumTotalTermFreq"), e.getMessage)
+  }
+
+  test("collection stats of a loaded view cost no Spark job; a view with no commit aggregates once") {
+    val dir = tmpDir()
+    IndexWriter.build(spark, corpus(300), dir, segSize = 128L, nBatches = 2)
+    val loaded = IndexReader.load(spark, dir)
+    val inMemory = Indexer.buildTables(spark, corpus(300), 128L)
+    val sc = spark.sparkContext
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    def jobs(g: String) = sc.statusTracker.getJobIdsForGroup(g).length
+    inGroup("stats-loaded")(GlobalStats.collectionStats(loaded))
+    inGroup("stats-memory-1")(GlobalStats.collectionStats(inMemory))
+    inGroup("stats-memory-2")(GlobalStats.collectionStats(inMemory))
+    // job events reach the status tracker in submission order: once the
+    // fence job is visible, every job submitted before it is too
+    inGroup("stats-fence")(sc.parallelize(Seq(1)).count())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (jobs("stats-fence") == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(jobs("stats-fence") > 0)
+    assert(jobs("stats-loaded") == 0)
+    assert(jobs("stats-memory-1") > 0)
+    assert(jobs("stats-memory-2") == 0)
+    assert(GlobalStats.collectionStats(loaded) == GlobalStats.collectionStats(inMemory))
   }
 
   test("resumability: killed build resumes to an identical snapshot (north rule)") {
@@ -75,6 +123,7 @@ class IndexStoreSpec extends AnyFunSuite {
         .sortBy(t => (t._1, t._2, t._3)).toList
     }
     assert(signature(dirA) == signature(dirB))
+    assertCommittedStats(IndexReader.load(spark, dirB))
     // resumed build skipped batch 0: its manifest is the one from the failed run
     assert(IndexStore.readManifest(dirB, 0).get.docs ==
       IndexStore.readManifest(dirA, 0).get.docs)
@@ -208,8 +257,10 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(IndexStore.tryPublishSnapshot(dir, Snapshot(2, 128L, Seq(0, 1, 2))))
     // live read sees v2; time-travel read reconstructs v1 exactly
     assert(IndexReader.load(spark, dir).docmeta.count() == 900)
+    assertCommittedStats(IndexReader.load(spark, dir))
     val v1 = IndexReader.loadVersion(spark, dir, 1)
     assert(v1.docmeta.count() == 600)
+    assertCommittedStats(v1)
     assert(topDocs(v1, Seq("w0001", "w0042")) ==
       topDocs(Indexer.buildTables(spark, corpus(600), 128L), Seq("w0001", "w0042")))
     intercept[IllegalArgumentException] {

@@ -1008,7 +1008,7 @@ class MoreQueriesSpec extends AnyFunSuite {
       (3L, "spark a b join spark c d join"),
       // short doc: child1 = "spark join", gc11 = "join"
       (4L, "x y spark join"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-gcj").toString
+    val dir = SparkTestBase.tempDir("graft-gcj")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))

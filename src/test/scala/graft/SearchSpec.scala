@@ -202,5 +202,17 @@ class SearchSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.sum("ctf").as("ctf"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toList
     assert(salted == fromTerms)
+
+    // the one-action term stats equal a groupBy over the dictionary for
+    // present, absent and duplicated terms
+    import org.apache.spark.sql.functions.{col, sum}
+    val asked = Seq("w0000", "w0017", "w0017", "w0900", "nosuchterm", "w1999", "w0000")
+    val reference = view.terms.filter(col("term").isin(asked: _*))
+      .groupBy("term").agg(sum("df"), sum("ctf"))
+      .collect().map(r => r.getString(0) ->
+        graft.stats.TermStats(r.getString(0), r.getLong(1), r.getLong(2))).toMap
+    val ts = GlobalStats.termStats(view, asked)
+    assert(ts == reference)
+    assert(ts.contains("w0000") && ts.contains("w0017") && !ts.contains("nosuchterm"))
   }
 }

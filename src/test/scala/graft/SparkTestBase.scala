@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for all specs (one JVM, forked by sbt). */
@@ -14,5 +15,25 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  sys.addShutdownHook(tempDirs.forEach(deleteRecursively(_)))
+
+  private def deleteRecursively(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
+
+  /** A fresh temp dir, deleted with everything in it when the test JVM
+    * exits.
+    */
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
   }
 }

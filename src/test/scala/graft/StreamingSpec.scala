@@ -14,9 +14,6 @@ import graft.synth.CorpusSynth
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
-
   test("NRT ingest: streamed corpus == bulk-built corpus, snapshot per batch") {
     import spark.implicits._
     val n = 600L
@@ -26,10 +23,10 @@ class StreamingSpec extends AnyFunSuite {
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[DocInput]
-    val dir = tmp("graft-nrt")
+    val dir = SparkTestBase.tempDir("graft-nrt")
     // processing-time trigger: AvailableNow would snapshot offsets at
     // start and never see data added afterwards
-    val q = NrtIngest.start(spark, mem.toDS(), dir, tmp("graft-nrt-ckpt"),
+    val q = NrtIngest.start(spark, mem.toDS(), dir, SparkTestBase.tempDir("graft-nrt-ckpt"),
       segSize = 256L, trigger = Trigger.ProcessingTime("100 milliseconds"))
 
     mem.addData(docs.take(300).toSeq: _*)
@@ -43,7 +40,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // streamed index answers == bulk index answers
     val streamed = IndexReader.load(spark, dir).persisted()
-    val bulkDir = tmp("graft-bulk")
+    val bulkDir = SparkTestBase.tempDir("graft-bulk")
     IndexWriter.build(spark, spark.createDataset(docs.toIndexedSeq), bulkDir, 256L)
     val bulk = IndexReader.load(spark, bulkDir).persisted()
     val qterms = Seq("w0001", "w0010")
@@ -53,6 +50,10 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a == b)
     assert(streamed.docmeta.count() == bulk.docmeta.count())
+    // the reloaded NRT snapshot's commit stats equal its docmeta aggregate
+    assert(streamed.committedStats.isDefined)
+    assert(graft.stats.GlobalStats.collectionStats(streamed) ==
+      graft.stats.GlobalStats.docmetaStats(streamed.docmeta))
   }
 
   test("BMW == exact on a streamed index whose batches share a segment") {
@@ -63,7 +64,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = CorpusSynth.corpusWithIds(spark, 600, seed = 13L)
       .as[(Long, String, String)].collect()
       .map(t => DocInput(t._1, t._2, t._3))
-    val dir = tmp("graft-nrt-sharedseg")
+    val dir = SparkTestBase.tempDir("graft-nrt-sharedseg")
     NrtIngest.ingestBatch(spark, spark.createDataset(docs.take(300).toIndexedSeq),
       dir, 0L, 100000L, Set.empty)
     NrtIngest.ingestBatch(spark, spark.createDataset(docs.drop(300).toIndexedSeq),
@@ -86,7 +87,7 @@ class StreamingSpec extends AnyFunSuite {
   test("re-delivered micro-batch is idempotent (manifest skip)") {
     import spark.implicits._
     val docs = (0L until 100L).map(i => DocInput(i, s"u$i", s"alpha beta w$i"))
-    val dir = tmp("graft-nrt-idem")
+    val dir = SparkTestBase.tempDir("graft-nrt-idem")
     val ds = spark.createDataset(docs)
     NrtIngest.ingestBatch(spark, ds, dir, 0L, 64L, Set.empty)
     val m1 = graft.index.IndexStore.readManifest(dir, NrtIngest.StreamBatchBase).get

@@ -27,7 +27,7 @@ class TrainingDataSpec extends AnyFunSuite {
       (4L, other), (5L, "x1 x2 x3"),                 // unrelated
       (6L, other + " a17")                           // near dup of 4
     )
-    val dir = java.nio.file.Files.createTempDirectory("graft-td").toString
+    val dir = SparkTestBase.tempDir("graft-td")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -433,7 +433,7 @@ class TrainingDataSpec extends AnyFunSuite {
       (2L, "aaa aaa fff target", "en"),
       (3L, "ggg hhh ddd ddd noise noise", "fr"),
       (4L, "ccc target", "en"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
+    val dir = SparkTestBase.tempDir("graft-dsir")
     rows.toDF("doc_id", "text", "lang")
       .withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -475,7 +475,7 @@ class TrainingDataSpec extends AnyFunSuite {
       (0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)),
       (2L, Seq(2f, 0f, 0f, 0f)), (3L, Seq(0f, 3f, 0f, 0f)),
       (4L, Seq(1f, 1f, 0f, 0f)), (5L, Seq(0f, 0f, 1f, 0f)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-semd").toString
+    val dir = SparkTestBase.tempDir("graft-semd")
     rows.toDF("vec_id", "embedding").withColumn("label", lit(0))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val got = TrainingData.semDedup(spark, dir, kSeeds = 2, tauQ = 950000L)
@@ -494,7 +494,7 @@ class TrainingDataSpec extends AnyFunSuite {
       (1L, "the of tiny"),                       // too few words
       (2L, "the of aa bb cc dd ee ff gg hh ii jj"), // mean word length 220 < 300
       (3L, "quality training corpora filtering rules applied without any function words here"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-gopher").toString
+    val dir = SparkTestBase.tempDir("graft-gopher")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -560,7 +560,7 @@ class TrainingDataSpec extends AnyFunSuite {
       (3L, "b1 b1 b1 b1 b1 b1 c1 c1 d1"),       // maxfreq 6 > 4 -> quant 2
       (4L, "z w9 q")                            // 1-char tokens dropped
     )
-    val dir = java.nio.file.Files.createTempDirectory("graft-tps").toString
+    val dir = SparkTestBase.tempDir("graft-tps")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -611,7 +611,7 @@ class TrainingDataSpec extends AnyFunSuite {
     // doc_ids 0/100/200 share host doc_id%50=0 and path doc_id%100=0
     val rows = Seq((0L, "short"), (100L, "the longest text wins here"),
       (200L, "mid length"), (7L, "alone"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-udb").toString
+    val dir = SparkTestBase.tempDir("graft-udb")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
